@@ -25,6 +25,7 @@ from arnab_spark.dialect import (
     transpile_statement,
 )
 from arnab_spark._dialect_statements import _attached_for
+from arnab_spark.catalog import has_part_files, replace_parquet
 
 # ------------------------------------------- DML: INSERT / DELETE / UPDATE
 #
@@ -292,73 +293,27 @@ def _dml_pruned_rewrite(
     return True
 
 
-def _has_part_files(root: str) -> bool:
-    """True when ``root`` holds at least one ``.parquet`` part file
-    (``_SUCCESS`` and friends don't count) — the readability invariant
-    every DML write must leave behind."""
-    import os as _os
-
-    return any(
-        f.endswith(".parquet")
-        for _r, _d, files in _os.walk(root)
-        for f in files
-    )
-
-
-def _dml_persist(spark, name: str, kind: str, df) -> None:
-    """Atomically replace ``name``'s contents with ``df``."""
+def _dml_persist(spark, name: str, kind: str, df, dest: str | None = None) -> None:
+    """Replace ``name``'s contents with ``df``: a warehouse-backed table
+    (its parquet dir ``dest``, by default its registered backing)
+    through the crash-safe :func:`arnab_spark.catalog.replace_parquet`,
+    a session table as an eager checkpoint, a native catalog table by
+    INSERT OVERWRITE."""
     if kind == "backed":
-        import os as _os
-        import shutil as _shutil
-
-        dest = table_backing_for(spark)[name.lower()]
-        staging, old = f"{dest}__dml_staging", f"{dest}__dml_old"
-        # the write triggers the lazy read of dest; dest stays intact
-        # until the rename pair below (same staged-swap discipline as
-        # node._write_incremental). A hive-partitioned table keeps its
-        # layout through the swap — a plain rewrite would silently
-        # flatten the dirs and disable every later pruned fast path
-        # (found by the DML scale harness)
-        # intersect the on-disk layout with the NEW relation's columns:
+        dest = dest or table_backing_for(spark)[name.lower()]
+        # a hive-partitioned table keeps its layout through the replace
+        # — a plain rewrite would silently flatten the dirs and disable
+        # every later pruned fast path (found by the DML scale harness).
+        # Intersect the on-disk layout with the NEW relation's columns:
         # ALTER TABLE DROP/RENAME of a partition column hands us a frame
-        # without that column, and partitionBy on a missing name errors
-        # (dest intact, but the statement fails where DuckDB succeeds) —
-        # such a table degrades to a flat layout instead
+        # without that column, and such a table degrades to flat
         have = {c.lower(): c for c in df.columns}
         pcols = [
             have[c.lower()]
             for c in _hive_partition_cols(dest)
             if c.lower() in have
         ]
-        w = df.write.mode("overwrite")
-        if pcols:
-            w = w.partitionBy(*pcols)
-        w.parquet(staging)
-        if not _has_part_files(staging):
-            # an EMPTY relation written with partitionBy produces no
-            # parquet files (only _SUCCESS), and swapping that in would
-            # leave the table unreadable (UNABLE_TO_INFER_SCHEMA on the
-            # next read) — DuckDB leaves an empty table with its schema
-            # intact, so write the schema-bearing empty part file flat
-            spark.createDataFrame([], df.schema).write.mode(
-                "overwrite"
-            ).parquet(staging)
-        elif pcols:
-            # hive dirs carry partition values as TEXT and the re-read
-            # re-infers their type — an ALTER COLUMN p TYPE VARCHAR
-            # would silently read back as INT. Self-validate: if the
-            # staged read-back disagrees with the frame's type for any
-            # partition column, type fidelity beats layout — rewrite
-            # flat so the parquet file carries the real type (footer
-            # read only; the full swap already paid the table rewrite)
-            back = dict(spark.read.parquet(staging).dtypes)
-            want = dict(df.dtypes)
-            if any(back.get(c) != want[c] for c in pcols):
-                df.write.mode("overwrite").parquet(staging)
-        _shutil.rmtree(old, ignore_errors=True)
-        _os.rename(dest, old)
-        _os.rename(staging, dest)
-        _shutil.rmtree(old, ignore_errors=True)
+        replace_parquet(spark, dest, df, pcols)
         spark.read.parquet(dest).createOrReplaceTempView(name)
     elif kind == "tempview":
         df.localCheckpoint(eager=True).createOrReplaceTempView(name)
@@ -396,8 +351,8 @@ def _freeze_returning_rows(spark, rows_df) -> str:
     yanking its blocks would fail that later action. Dropping our
     registry reference is enough — once the caller's own reference goes,
     Python GC releases the py4j handle and Spark's ContextCleaner
-    reclaims the checkpoint blocks. Session teardown
-    (:meth:`arnab_spark.session.Session.run` epilogue) reaps the final
+    reclaims the checkpoint blocks. Closing the connection
+    (:func:`arnab_spark.session.close_connection`) reaps the final
     statement's view the same way."""
     import uuid
 
@@ -412,9 +367,9 @@ def _freeze_returning_rows(spark, rows_df) -> str:
 def reap_returning_view(spark) -> None:
     """Drop the session's outstanding RETURNING temp view (if any) and
     release the registry's checkpoint reference. Safe to call when none
-    is outstanding. Called between RETURNING statements and from the
-    run-loop epilogue so no ``__arnab_returning_*`` view survives a
-    completed run."""
+    is outstanding. Called between RETURNING statements and when a
+    ``run`` or ``run-file`` closes its connection, so no
+    ``__arnab_returning_*`` view survives a completed run."""
     prev = _RETURNING_VIEWS_BY_SESSION.pop(spark, None)
     if prev is not None:
         view_name, _ckpt = prev
@@ -473,7 +428,7 @@ def _overwrite_touched_partitions(
         if key not in alive:
             sub = _os.path.join(dest, *[f"{c}={v}" for c, v in zip(pcols, key)])
             _shutil.rmtree(sub, ignore_errors=True)
-    if not _has_part_files(dest):
+    if not has_part_files(dest):
         spark.createDataFrame([], survivors.schema).write.mode(
             "overwrite"
         ).parquet(dest)
@@ -979,13 +934,8 @@ def _rewrite_create_table(sql: str, spark):
         from arnab_spark.catalog import record_model
 
         dest = _os.path.join(wh, name)
-        if _os.path.exists(dest):
-            table_backing_for(spark)[name.lower()] = dest
-            _dml_persist(spark, name, "backed", df)
-        else:
-            df.write.mode("overwrite").parquet(dest)
-            spark.read.parquet(dest).createOrReplaceTempView(name)
-            table_backing_for(spark)[name.lower()] = dest
+        _dml_persist(spark, name, "backed", df, dest)
+        table_backing_for(spark)[name.lower()] = dest
         record_model(wh, name, "table")
     return ""
 

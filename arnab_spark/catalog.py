@@ -18,61 +18,144 @@ upstream table re-applies after it, so references resolve. Upserts
 update in place — re-running one model must not move it past a
 downstream view in the order. A view whose upstream vanished re-raises
 only on *query*, like a DuckDB view over a dropped table; attach warns
-and skips it.
+and skips it. Sidecar writes are read-modify-writes under one ``flock``.
+
+Table data changes through :func:`replace_parquet`, the one crash-safe
+way to replace a model's or a script table's Parquet dir.
 """
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
+import shutil
+
+from arnab_spark.errors import ArnabError
 
 CATALOG_FILE = "_arnab_catalog.json"
+MACROS_FILE = "_arnab_macros.json"
+LOCK_FILE = "_arnab.lock"
+
+#: suffixes of the two sibling dirs a Parquet replace passes through
+STAGING, OLD = "__staging", "__old"
 
 
-def _catalog_path(db_path: str) -> str:
-    return os.path.join(db_path, CATALOG_FILE)
+def has_part_files(root: str) -> bool:
+    """True when ``root`` holds at least one ``.parquet`` part file
+    (``_SUCCESS`` and friends don't count) — the readability invariant
+    every replace must leave behind. A file listing, not a Spark read."""
+    return any(
+        f.endswith(".parquet") for _r, _d, files in os.walk(root) for f in files
+    )
 
 
-def load_catalog(db_path: str) -> dict[str, dict]:
-    path = _catalog_path(db_path)
+def recover(dest: str) -> None:
+    """Undo a replace that crashed between its two renames: ``dest`` is
+    gone but its old copy survived, so put the old copy back (that
+    write is lost, the earlier data is not)."""
+    if not os.path.isdir(dest) and os.path.isdir(dest + OLD):
+        os.rename(dest + OLD, dest)
+
+
+def replace_parquet(spark, dest: str, df, partition_cols=()) -> None:
+    """Replace the Parquet dir ``dest`` with ``df`` — the one crash-safe
+    replace every table write goes through (the Spark twin of DuckDB's
+    atomic ``CREATE OR REPLACE TABLE``, reference: node.rs:156-174).
+
+    ``df`` is written to a staging dir first, so a failing write leaves
+    ``dest`` untouched (``df`` may itself read ``dest``) and removes the
+    staging dir. Two repairs keep the staged copy readable with the
+    right types:
+
+    - an EMPTY relation written with ``partitionBy`` produces no part
+      file (only ``_SUCCESS``), which reads back as
+      UNABLE_TO_INFER_SCHEMA — DuckDB keeps an empty table with its
+      schema, so the schema-bearing empty part file is written flat;
+    - hive dirs carry partition values as text and the read re-infers
+      their type (a VARCHAR column of digits reads back as INT) — when
+      any partition column reads back with another type, type fidelity
+      beats layout and the data is rewritten flat (a footer read).
+
+    Then the old copy moves aside, staging is promoted and the old copy
+    dropped: a crash at any point leaves the old or the new data intact,
+    and :func:`recover` (run here and by :func:`attach_warehouse`)
+    restores the old copy after a crash between the two renames."""
+    recover(dest)
+    staging, old = dest + STAGING, dest + OLD
+    try:
+        writer = df.write.mode("overwrite")
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(staging)
+        if not has_part_files(staging):
+            spark.createDataFrame([], df.schema).write.mode("overwrite").parquet(staging)
+        elif partition_cols:
+            back, want = dict(spark.read.parquet(staging).dtypes), dict(df.dtypes)
+            if any(back.get(c) != want[c] for c in partition_cols):
+                df.write.mode("overwrite").parquet(staging)
+        if not has_part_files(staging):
+            raise ArnabError(f"staged write of {dest} left no parquet part file")
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)  # dest is untouched
+        raise
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.isdir(dest):
+        os.rename(dest, old)
+    os.rename(staging, dest)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _read_json(path: str) -> dict:
     if not os.path.isfile(path):
         return {}
     with open(path, encoding="utf-8") as f:
         return json.load(f)
 
 
+def load_catalog(db_path: str) -> dict[str, dict]:
+    return _read_json(os.path.join(db_path, CATALOG_FILE))
+
+
+def _write_json(db_path: str, name: str, update) -> None:
+    """Read-modify-write the JSON sidecar ``name`` in ``db_path`` under
+    an exclusive ``flock`` on ``LOCK_FILE``, so concurrent writers never
+    lose an update. ``update(data)`` edits the dict in place and returns
+    whether to write it. Temp file + ``os.replace``, so a crash
+    mid-write leaves the previous file intact."""
+    os.makedirs(db_path, exist_ok=True)
+    path = os.path.join(db_path, name)
+    with open(os.path.join(db_path, LOCK_FILE), "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        data = _read_json(path)
+        if not update(data):
+            return
+        tmp = path + ".tmp"
+        with open(tmp, "w", encoding="utf-8") as f:
+            json.dump(data, f, indent=1)
+        os.replace(tmp, path)
+
+
 def record_model(
     db_path: str, model_id: str, materialize: str, select_sql: str | None = None
 ) -> None:
-    """Upsert one model's catalog entry (atomic temp-file + rename, so a
-    crash mid-write leaves the previous catalog intact)."""
-    os.makedirs(db_path, exist_ok=True)
-    cat = load_catalog(db_path)
+    """Upsert one model's catalog entry."""
     entry = {"materialize": materialize}
     if select_sql is not None:
         entry["select"] = select_sql
-    # dict assignment keeps an existing key's insertion position —
-    # exactly the in-place upsert the ordering contract needs
-    cat[model_id] = entry
-    tmp = _catalog_path(db_path) + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(cat, f, indent=1)
-    os.replace(tmp, _catalog_path(db_path))
+
+    def upsert(cat: dict) -> bool:
+        # dict assignment keeps an existing key's insertion position —
+        # exactly the in-place upsert the ordering contract needs
+        cat[model_id] = entry
+        return True
+
+    _write_json(db_path, CATALOG_FILE, upsert)
 
 
 def remove_model(db_path: str, model_id: str) -> None:
-    """Delete one model/table's catalog entry (script-level DROP TABLE;
-    same atomic temp-file + rename discipline as record_model)."""
-    cat = load_catalog(db_path)
-    if cat.pop(model_id, None) is None:
-        return
-    tmp = _catalog_path(db_path) + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(cat, f, indent=1)
-    os.replace(tmp, _catalog_path(db_path))
-
-
-MACROS_FILE = "_arnab_macros.json"
+    """Delete one model/table's catalog entry (script-level DROP TABLE)."""
+    _write_json(db_path, CATALOG_FILE, lambda cat: cat.pop(model_id, None) is not None)
 
 
 def record_macros(db_path: str, macros: dict, dropped: set | None = None) -> None:
@@ -81,8 +164,7 @@ def record_macros(db_path: str, macros: dict, dropped: set | None = None) -> Non
     visible to every later process, while CREATE TEMP MACRO dies with
     the connection). ``dropped`` names are REMOVED from the persisted
     file — DROP MACRO must be durable like DuckDB's, not resurrect on
-    the next session (round-5 advice). Snapshot-write is idempotent;
-    atomic rename."""
+    the next session (round-5 advice). Snapshot-write is idempotent."""
     persistent = {
         name: {"params": params, "body": body, "is_table": is_table}
         for name, (params, body, is_table, is_temp) in macros.items()
@@ -92,30 +174,23 @@ def record_macros(db_path: str, macros: dict, dropped: set | None = None) -> Non
     if not persistent and not dropped:
         return
     path = os.path.join(db_path, MACROS_FILE)
-    existing = {}
-    if os.path.isfile(path):
-        with open(path, encoding="utf-8") as f:
-            existing = json.load(f)
-    for name in dropped:
-        existing.pop(name, None)
-    existing.update(persistent)
-    if not existing and not os.path.isfile(path):
-        return  # nothing persisted and nothing to erase
-    os.makedirs(db_path, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(existing, f, indent=1)
-    os.replace(tmp, path)
+
+    def merge(existing: dict) -> bool:
+        for name in dropped:
+            existing.pop(name, None)
+        existing.update(persistent)
+        # nothing persisted and nothing to erase: leave no file behind
+        return bool(existing) or os.path.isfile(path)
+
+    _write_json(db_path, MACROS_FILE, merge)
 
 
 def _attach_macros(spark, db_path: str) -> list[str]:
-    path = os.path.join(db_path, MACROS_FILE)
-    if not os.path.isfile(path):
+    stored = _read_json(os.path.join(db_path, MACROS_FILE))
+    if not stored:
         return []
     from arnab_spark.dialect import _macros_for
 
-    with open(path, encoding="utf-8") as f:
-        stored = json.load(f)
     reg = _macros_for(spark)
     for name, e in stored.items():
         reg.setdefault(name, (e["params"], e["body"], e["is_table"], False))
@@ -182,6 +257,7 @@ def attach_warehouse(spark, db_path: str, prefix: str = "") -> list[str]:
         try:
             if entry["materialize"] in ("table", "incremental"):
                 dest = os.path.join(db_path, model_id)
+                recover(dest)
                 spark.read.parquet(dest).createOrReplaceTempView(prefix + model_id)
                 if not prefix:
                     # the session's OWN warehouse is writable: record the

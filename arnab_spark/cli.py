@@ -21,7 +21,7 @@ from arnab_spark.config import load_config
 from arnab_spark.dialect import transpile_statement
 from arnab_spark.errors import ArnabError
 from arnab_spark.node import Node
-from arnab_spark.session import Session
+from arnab_spark.session import Session, close_connection, open_connection
 from arnab_spark.viz import save_visualization
 
 
@@ -77,25 +77,11 @@ def cmd_run_file(args) -> int:
     the DuckDB file before dispatch, main.rs:126-132)."""
     spark = _get_spark(args.master)
     cfg = load_config(".", args.models_dir, args.db_path)
-    # engine settings + warehouse attach happen at "connection open",
-    # before dispatch — exactly when the reference applies its SET loop
-    # and opens the DuckDB file (main.rs:126-155), so run-file scripts
-    # see both
-    from arnab_spark.spark_utils import configure
-
-    configure(spark)
-    for k, v in cfg.engine_settings.items():
-        try:
-            spark.conf.set(k, str(v))
-        except Exception as exc:
-            print(f"error: failed to apply spark_settings {k}={v}: {exc}", file=sys.stderr)
-            return 1
-    if cfg.db_path:
-        from arnab_spark.catalog import attach_warehouse
-        from arnab_spark.dialect import set_warehouse_for
-
-        set_warehouse_for(spark, cfg.db_path)
-        attach_warehouse(spark, cfg.db_path)
+    try:
+        open_connection(spark, cfg)
+    except ArnabError as exc:
+        print(f"error: {exc}", file=sys.stderr)
+        return 1
     rc = 0
     for path in args.paths:
         try:
@@ -116,16 +102,7 @@ def cmd_run_file(args) -> int:
         except Exception as exc:
             print(f"{path}: ERROR {exc}")
             rc = 1 if args.strict else rc
-    if cfg.db_path:
-        from arnab_spark.catalog import record_macros
-        from arnab_spark.dialect import _macros_for, dropped_macros_for
-
-        record_macros(cfg.db_path, _macros_for(spark), dropped_macros_for(spark))
-    # CLI exit path: reap the final RETURNING view so a completed
-    # run-file leaves no __arnab_returning_* temp view behind (round 15)
-    from arnab_spark._dialect_dml import reap_returning_view
-
-    reap_returning_view(spark)
+    close_connection(spark, cfg)
     return rc
 
 

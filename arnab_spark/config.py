@@ -70,11 +70,10 @@ def load_config(
         cfg.models_dir = models_dir_override
     if db_path_override:
         cfg.db_path = db_path_override
-    # Resolve relative paths against the project cwd.
-    if cfg.models_dir and not os.path.isabs(cfg.models_dir):
-        cfg.models_dir = os.path.join(cwd, cfg.models_dir)
-    if cfg.macro_path and not os.path.isabs(cfg.macro_path):
-        cfg.macro_path = os.path.join(cwd, cfg.macro_path)
-    if cfg.db_path and not os.path.isabs(cfg.db_path):
-        cfg.db_path = os.path.join(cwd, cfg.db_path)
+    # Resolve relative paths against the project cwd, to absolute ones:
+    # the JVM resolves a relative path against its own cwd, which need
+    # not be Python's, so Parquet and catalog would split otherwise
+    for attr in ("models_dir", "macro_path", "db_path"):
+        if getattr(cfg, attr):
+            setattr(cfg, attr, os.path.abspath(os.path.join(cwd, getattr(cfg, attr))))
     return cfg

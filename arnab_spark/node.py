@@ -17,22 +17,26 @@ The Spark materialization mapping (reference: node.rs:156-174):
 - ``view``  → ``CREATE OR REPLACE TEMP VIEW {id} AS (...)`` — a lazy
   plan; chained views collapse into one Catalyst plan, so filters cross
   model boundaries (the reference gets this via DuckDB view inlining).
-- ``table`` → execute the SELECT and write Parquet under
-  ``{db_path}/{id}`` (overwrite), then register a view over the Parquet.
-  This persists across sessions like the reference's file-backed DuckDB
-  catalog (reference: main.rs:126-132), and at scale gives downstream
-  models a pruned columnar scan instead of a recomputation.
+- ``table`` → execute the SELECT and replace the Parquet dir
+  ``{db_path}/{id}`` with it (:func:`arnab_spark.catalog.replace_parquet`:
+  staged write, then swap — a failing run keeps the previous table),
+  then register a view over the Parquet. This persists across sessions
+  like the reference's file-backed DuckDB catalog (reference:
+  main.rs:126-132), and at scale gives downstream models a pruned
+  columnar scan instead of a recomputation.
 """
 
 from __future__ import annotations
 
+import os
 import re
 import time
 from dataclasses import dataclass, field
 from enum import Enum
 
+from arnab_spark import catalog
 from arnab_spark.depparse import get_sql_references
-from arnab_spark.dialect import transpile_statement
+from arnab_spark.dialect import table_backing_for, transpile_statement
 from arnab_spark.errors import ArnabError, StatementExecutionError
 
 class NodeKind(Enum):
@@ -232,75 +236,82 @@ class Node:
             df = df.sortWithinPartitions(*(pcols + ccols))
         return df, pcols
 
-    def _write_table(self, df, dest: str) -> None:
-        """Layout-applying overwrite write shared by the table path and
-        both incremental write sites."""
-        df, pcols = self._layout(df)
-        writer = df.write.mode("overwrite")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(dest)
-
-    def _write_incremental(self, spark, df, dest: str) -> None:
+    def _merge_incremental(self, spark, df, dest: str):
         """Incremental materialization — the reference's explicitly
         deferred roadmap item (reference: README.md:54-58), essential at
-        100 TB where full recomputation is unaffordable.
+        100 TB where full recomputation is unaffordable. Returns the
+        relation that replaces ``dest``.
 
-        Semantics: first run writes the full result. Later runs merge
-        into the existing Parquet: with ``unique_key``, new rows win per
-        key and untouched keys are preserved (delete+insert upsert);
-        without it, the run's rows are appended. The swap sequence is
-        staging-write → rename dest aside → promote staging → drop the
-        old copy, with recovery of a crashed swap on the next run — a
-        crash at any point leaves either the old or the new
-        materialization intact, never neither. At warehouse scale the
-        same merge runs per partition (or via MERGE INTO on a lakehouse
-        table format).
+        Semantics: the first run writes the full result. Later runs
+        merge into the existing Parquet: with ``unique_key``, new rows
+        win per key and untouched keys are preserved (delete+insert
+        upsert); without it, the run's rows are appended. The merged
+        relation reads ``dest``, which stays intact until the staged
+        replace promotes the result. At warehouse scale the same merge
+        runs per partition (or via MERGE INTO on a lakehouse table
+        format).
         """
-        import os
-        import shutil
-
-        old = f"{dest}__old"
-        if not os.path.isdir(dest) and os.path.isdir(old):
-            # a previous run crashed between renames — restore the old
-            # materialization (that merge is lost, history is not)
-            os.rename(old, dest)
+        catalog.recover(dest)  # merge into the last complete copy
         if not os.path.isdir(dest):
-            self._write_table(df, dest)
-            return
+            return df
         existing = spark.read.parquet(dest)
-        if self.unique_key:
-            keys = [k.strip() for k in self.unique_key.split(",")]
-            missing = [k for k in keys if k not in df.columns]
-            if missing:
-                raise ArnabError(
-                    f"model {self.id}: unique_key column(s) {missing} not in output"
-                )
-            survivors = existing.join(df.select(*keys).distinct(), on=keys, how="left_anti")
-            merged = df.unionByName(survivors)
-        else:
-            merged = existing.unionByName(df)
-        staging = f"{dest}__staging"
-        self._write_table(merged, staging)
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(dest, old)
-        os.rename(staging, dest)
-        shutil.rmtree(old, ignore_errors=True)
+        if not self.unique_key:
+            return existing.unionByName(df)
+        keys = [k.strip() for k in self.unique_key.split(",")]
+        missing = [k for k in keys if k not in df.columns]
+        if missing:
+            raise ArnabError(
+                f"model {self.id}: unique_key column(s) {missing} not in output"
+            )
+        survivors = existing.join(df.select(*keys).distinct(), on=keys, how="left_anti")
+        return df.unionByName(survivors)
 
-    def _record_backing(self, spark, parquet_path: str) -> None:
-        """Register the table's parquet dir so dialect-level DML
-        (INSERT/DELETE/UPDATE through the node.rs:176 passthrough)
-        persists through a staged swap of this dir."""
-        from arnab_spark.dialect import table_backing_for
-
-        table_backing_for(spark)[self.id.lower()] = parquet_path
+    def _materialize(self, spark, db_path: str | None, df, select_sql: str | None = None):
+        """The one materialization step for SQL and Python models
+        (reference: node.rs:156-189). A view registers the relation: a
+        SQL view as a temp view over ``select_sql``, recorded in the
+        catalog so later sessions re-create it; a Python view has no
+        SELECT to record. A table or incremental model replaces its
+        Parquet dir, registers a view over it, records the backing (so
+        dialect-level DML persists through the same replace) and the
+        catalog entry, and returns the row count."""
+        if self.materialize == "view":
+            if select_sql is None:
+                df.createOrReplaceTempView(self.id)
+                return NodeExecutionResult(None, "view")
+            spark.sql(self.materialization_sql(select_sql, db_path)[0])
+            if db_path:
+                # persist the model in the warehouse catalog so later
+                # sessions reattach it — parity with the reference's
+                # DuckDB-file persistence (node.rs:156-174, main.rs:126-132)
+                catalog.record_model(db_path, self.id, "view", select_sql)
+            return NodeExecutionResult(None, "view")
+        _, dest = self.materialization_sql(select_sql, db_path)
+        if self.materialize == "incremental":
+            df = self._merge_incremental(spark, df, dest)
+        df, pcols = self._layout(df)
+        catalog.replace_parquet(spark, dest, df, pcols)
+        spark.read.parquet(dest).createOrReplaceTempView(self.id)
+        table_backing_for(spark)[self.id.lower()] = dest
+        catalog.record_model(db_path, self.id, self.materialize)
+        # row-count readback (reference: node.rs:179-189)
+        return NodeExecutionResult(spark.table(self.id).count(), self.materialize)
 
     def execute(self, spark, db_path: str | None) -> NodeExecutionResult:
-        """Run the model (reference: node.rs:125-207). Non-record
-        statements (SET etc.) run first; the single record-returning
-        statement is materialized."""
+        """Run the model (reference: node.rs:125-207). A Python model's
+        DataFrame, or a SQL model's single record-returning statement,
+        is materialized; the other statements (SET etc.) run in order."""
         if self.kind is NodeKind.PYTHON:
-            return self._execute_python(spark, db_path)
+            # a Python model is a function returning a DataFrame
+            # (unblocks the reference's abandoned plan, node.rs:19-20)
+            if self.python_fn is None:
+                raise ArnabError(f"python model {self.id} has no callable")
+            try:
+                return self._materialize(spark, db_path, self.python_fn(spark))
+            except ArnabError:
+                raise
+            except Exception as exc:
+                raise StatementExecutionError(str(exc), f"<python:{self.id}>", self.path) from exc
         statements = self.split_statements(self.rendered_src)
         record_stmts = [s for s in statements if self.will_produce_records(s)]
         if len(record_stmts) != 1:  # reference: node.rs:133-144
@@ -308,6 +319,7 @@ class Node:
                 f"model {self.id} must contain exactly one record-returning "
                 f"statement, found {len(record_stmts)}"
             )
+        result = NodeExecutionResult(None, "view")
         for stmt in statements:
             if stmt in ("", ";"):
                 continue  # reference skips "No statement to prepare" (node.rs:193-198)
@@ -318,77 +330,15 @@ class Node:
                 if not stmt.strip():
                     continue  # consumed by the shim (e.g. CREATE MACRO)
                 if self.will_produce_records(stmt):
-                    wrapped, parquet_path = self.materialization_sql(stmt, db_path)
-                    if parquet_path is None:
-                        spark.sql(wrapped)
-                    elif self.materialize == "incremental":
-                        self._write_incremental(spark, spark.sql(stmt), parquet_path)
-                        spark.read.parquet(parquet_path).createOrReplaceTempView(self.id)
-                        self._record_backing(spark, parquet_path)
-                    else:
-                        self._write_table(spark.sql(stmt), parquet_path)
-                        spark.read.parquet(parquet_path).createOrReplaceTempView(self.id)
-                        self._record_backing(spark, parquet_path)
-                    if db_path:
-                        # persist the model in the warehouse catalog so
-                        # later sessions reattach it — parity with the
-                        # reference's DuckDB-file persistence
-                        # (node.rs:156-174, main.rs:126-132)
-                        from arnab_spark.catalog import record_model
-
-                        record_model(
-                            db_path,
-                            self.id,
-                            self.materialize,
-                            stmt if parquet_path is None else None,
-                        )
+                    df = None if self.materialize == "view" else spark.sql(stmt)
+                    result = self._materialize(spark, db_path, df, stmt)
                 else:
                     spark.sql(stmt)
             except ArnabError:
                 raise
             except Exception as exc:
                 raise StatementExecutionError(str(exc), stmt, self.path) from exc
-        if db_path:
-            # non-TEMP CREATE MACROs persist in the warehouse like the
-            # reference's macros persist in the DuckDB file
-            from arnab_spark.catalog import record_macros
-            from arnab_spark.dialect import _macros_for, dropped_macros_for
-
-            record_macros(db_path, _macros_for(spark), dropped_macros_for(spark))
-        if self.materialize in ("table", "incremental"):
-            # row-count readback (reference: node.rs:179-189)
-            return NodeExecutionResult(spark.table(self.id).count(), self.materialize)
-        return NodeExecutionResult(None, "view")
-
-    def _execute_python(self, spark, db_path: str | None) -> NodeExecutionResult:
-        """PYTHON model kind: the function returns a DataFrame which is
-        materialized exactly like a SQL model's SELECT (unblocks the
-        reference's abandoned plan, node.rs:19-20)."""
-        if self.python_fn is None:
-            raise ArnabError(f"python model {self.id} has no callable")
-        try:
-            df = self.python_fn(spark)
-        except Exception as exc:
-            raise StatementExecutionError(str(exc), f"<python:{self.id}>", self.path) from exc
-        if self.materialize in ("table", "incremental"):
-            if not db_path:
-                raise ArnabError(
-                    f"model {self.id}: materialize={self.materialize} requires "
-                    f"db_path (warehouse dir)"
-                )
-            dest = f"{db_path}/{self.id}"
-            if self.materialize == "incremental":
-                self._write_incremental(spark, df, dest)
-            else:
-                self._write_table(df, dest)
-            spark.read.parquet(dest).createOrReplaceTempView(self.id)
-            self._record_backing(spark, dest)
-            from arnab_spark.catalog import record_model
-
-            record_model(db_path, self.id, self.materialize)
-            return NodeExecutionResult(spark.table(self.id).count(), self.materialize)
-        df.createOrReplaceTempView(self.id)
-        return NodeExecutionResult(None, "view")
+        return result
 
 
 def format_elapsed(seconds: float) -> str:

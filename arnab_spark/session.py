@@ -21,9 +21,48 @@ import os
 from dataclasses import dataclass, field
 from graphlib import CycleError, TopologicalSorter
 
+from arnab_spark import catalog
 from arnab_spark.config import Config
+from arnab_spark.dialect import (
+    _macros_for,
+    dropped_macros_for,
+    reap_returning_view,
+    session_tables_for,
+    set_warehouse_for,
+)
 from arnab_spark.errors import ArnabError, CyclicDependencyError, UnknownModelType
 from arnab_spark.node import Node, NodeExecutionResult, NodeKind, Timer, format_elapsed
+from arnab_spark.spark_utils import configure
+
+
+def open_connection(spark, config: Config) -> None:
+    """Open a connection on ``spark`` for ``run`` and ``run-file`` —
+    the twin of the reference opening its DuckDB file and applying its
+    SET loop before dispatch (main.rs:126-155). Parity confs (UTC,
+    nanos-timestamp reads, …) go first so ``spark_settings`` can
+    override them; then the warehouse's models reattach, so a session
+    sees them before (or without) running the pipeline. Raises
+    :class:`ArnabError` when a setting cannot be applied (fatal, like
+    the reference's SET loop)."""
+    configure(spark)
+    for k, v in config.engine_settings.items():
+        try:
+            spark.conf.set(k, str(v))
+        except Exception as exc:  # e.g. CANNOT_MODIFY_CONFIG (static conf)
+            raise ArnabError(f"failed to apply spark_settings {k}={v}: {exc}") from exc
+    if config.db_path:
+        set_warehouse_for(spark, config.db_path)
+        catalog.attach_warehouse(spark, config.db_path)
+
+
+def close_connection(spark, config: Config) -> None:
+    """End of a ``run`` or ``run-file``: persist the session's non-TEMP
+    macros in the warehouse, like the reference's macros persist in the
+    DuckDB file, and reap the last RETURNING view so no
+    ``__arnab_returning_*`` view survives a completed run."""
+    if config.db_path:
+        catalog.record_macros(config.db_path, _macros_for(spark), dropped_macros_for(spark))
+    reap_returning_view(spark)
 
 
 @dataclass
@@ -52,32 +91,7 @@ class Session:
         self.spark = spark
         self.nodes: dict[str, Node] = {}
         if spark is not None:
-            # parity confs (UTC, nanos-timestamp reads, …) BEFORE user
-            # settings so config can override them; without this a model
-            # scanning events-style TIMESTAMP(NANOS) parquet fails on a
-            # fresh session unless a corpus load_table happened to run
-            # first (round-2 fix, surfaced by the QUALIFY model test)
-            from arnab_spark.spark_utils import configure
-
-            configure(spark)
-            for k, v in config.engine_settings.items():
-                # reference: main.rs:135-155 (SET k=v loop, fatal on error)
-                try:
-                    spark.conf.set(k, str(v))
-                except Exception as exc:  # e.g. CANNOT_MODIFY_CONFIG (static conf)
-                    raise ArnabError(
-                        f"failed to apply spark_settings {k}={v}: {exc}"
-                    ) from exc
-            if config.db_path:
-                # reattach previously materialized models — the Spark
-                # twin of the reference reopening its DuckDB file
-                # (main.rs:126-132): a session sees the warehouse's
-                # models before (or without) running the pipeline
-                from arnab_spark.catalog import attach_warehouse
-                from arnab_spark.dialect import set_warehouse_for
-
-                set_warehouse_for(spark, config.db_path)
-                attach_warehouse(spark, config.db_path)
+            open_connection(spark, config)
 
     # -- graph build (reference: session.rs:56-181) -------------------
 
@@ -170,6 +184,13 @@ class Session:
     # -- run loop (reference: session.rs:189-279) ---------------------
 
     def run(self, quiet: bool = False) -> RunReport:
+        # temp tables live for one run, like the reference's DuckDB temp
+        # objects live for one connection: drop the previous run's now,
+        # not at its end, so the models stay queryable between runs
+        tables = session_tables_for(self.spark)
+        for name in tables:
+            self.spark.catalog.dropTempView(name)
+        tables.clear()
         report = RunReport()
         with Timer() as total:
             order = self.build_graph()
@@ -192,13 +213,7 @@ class Session:
                     label = f"[{nid}]"
                     print(f"{label:.<60} {status} ({format_elapsed(t.elapsed)})")
         report.elapsed = total.elapsed
-        # epilogue: the run loop's last RETURNING statement (if any) left
-        # one frozen temp view outstanding — reap it so no
-        # __arnab_returning_* view survives a completed run (round 15,
-        # r14 verdict ask #6)
-        from arnab_spark._dialect_dml import reap_returning_view
-
-        reap_returning_view(self.spark)
+        close_connection(self.spark, self.config)
         if not quiet:
             if report.errors:
                 print(f"\n{len(report.errors)} model(s) failed:")

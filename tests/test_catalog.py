@@ -39,6 +39,38 @@ def test_catalog_records_run(spark, tmp_path):
     assert "SELECT" in cat["doubled"]["select"].upper()
 
 
+_RECORD_LOOP = """
+import sys, time
+from arnab_spark.catalog import record_model
+db, prefix, start = sys.argv[1], sys.argv[2], float(sys.argv[3])
+time.sleep(max(0.0, start - time.time()))  # both processes start together
+for i in range(200):
+    record_model(db, f"{prefix}{i}", "table")
+"""
+
+
+def test_concurrent_writers_lose_no_catalog_entry(tmp_path):
+    """Two processes upsert into one catalog at the same time: the
+    flock-guarded read-modify-write keeps every entry."""
+    import subprocess
+    import sys
+    import time
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    start = str(time.time() + 3)
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", _RECORD_LOOP, str(tmp_path), prefix, start],
+            env=dict(os.environ, PYTHONPATH=repo),
+        )
+        for prefix in ("a", "b")
+    ]
+    assert [p.wait(timeout=120) for p in procs] == [0, 0]
+    assert set(load_catalog(str(tmp_path))) == {
+        f"{prefix}{i}" for prefix in ("a", "b") for i in range(200)
+    }
+
+
 def test_fresh_session_sees_previous_run(spark, tmp_path):
     proj = _write_models(tmp_path)
     cfg = load_config(str(proj), None, None)

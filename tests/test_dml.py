@@ -14,6 +14,7 @@ import duckdb
 import pytest
 
 from arnab_spark import dialect
+from arnab_spark.catalog import OLD, STAGING
 from arnab_spark.dialect import table_backing_for, transpile_statement
 from arnab_spark.errors import ArnabError
 
@@ -654,8 +655,8 @@ def test_dml_persists_through_backed_table_swap(spark, tmp_path):
         ]
         assert on_disk == [(1, "a!", 10.5), (3, "c", 7.25), (4, "d", 0.5)]
         # and the staging/old dirs were cleaned up
-        assert not os.path.exists(dest + "__dml_staging")
-        assert not os.path.exists(dest + "__dml_old")
+        assert not os.path.exists(dest + STAGING)
+        assert not os.path.exists(dest + OLD)
     finally:
         table_backing_for(spark).pop("backed_t", None)
         spark.catalog.dropTempView("backed_t")

@@ -922,3 +922,32 @@ def test_event_analytics_example_project(spark, tmp_path, monkeypatch):
         exp = sorted(tuple(r) for r in reg[qname].fn(spark, SF).collect())
         assert got == exp, f"{model} != {qname}: {got[:2]} vs {exp[:2]}"
         assert spark.table(model).columns == reg[qname].fn(spark, SF).columns
+
+
+EXAMPLES = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "examples")
+
+
+@pytest.mark.parametrize("example", sorted(os.listdir(EXAMPLES)))
+def test_example_project_runs_twice_in_one_session(spark, tmp_path, monkeypatch, example):
+    """One Session runs its project twice: the second run must not trip
+    over the first run's temp state (duckdb_dialect's CREATE TEMP
+    TABLE), and every model stays queryable between the runs."""
+    import shutil
+
+    proj = tmp_path / example
+    shutil.copytree(
+        os.path.join(EXAMPLES, example),
+        proj,
+        ignore=shutil.ignore_patterns("warehouse", "spark-warehouse", "dag.svg"),
+    )
+    monkeypatch.chdir(proj)
+    session = Session(load_config("."), spark.newSession())
+    first = session.run(quiet=True)
+    assert first.ok, first.errors
+    for model in first.executed:
+        session.spark.table(model).limit(1).collect()
+    second = session.run(quiet=True)
+    assert second.ok, second.errors
+    assert {m: r.n_rows for m, r in second.results.items()} == {
+        m: r.n_rows for m, r in first.results.items()
+    }

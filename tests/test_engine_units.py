@@ -2,6 +2,8 @@
 reference's own tests (reference: src/node.rs:274-295) per SURVEY.md §5.
 """
 
+import os
+
 import pytest
 
 from arnab_spark.depparse import get_sql_references
@@ -289,6 +291,46 @@ def test_run_file_applies_engine_settings(tmp_path, monkeypatch, spark):
     assert cli.cmd_run_file(args) == 0
     assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
     spark.conf.set("spark.sql.shuffle.partitions", "32")  # restore
+
+
+def test_run_file_reports_unappliable_setting(tmp_path, monkeypatch, capsys, spark):
+    """A setting the connection cannot apply (a static conf) stops
+    run-file before any script runs, with an ``error:`` line and exit
+    code 1."""
+    import arnab_spark.cli as cli
+
+    (tmp_path / "config.yaml").write_text(
+        "spark_settings:\n  spark.sql.warehouse.dir: /nowhere\n"
+    )
+    (tmp_path / "script.sql").write_text("SELECT 1 AS one")
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setattr(cli, "_get_spark", lambda master: spark.newSession())
+    assert cli.main(["run-file", str(tmp_path / "script.sql")]) == 1
+    out = capsys.readouterr()
+    assert "error: failed to apply spark_settings spark.sql.warehouse.dir" in out.err
+    assert "script.sql" not in out.out
+
+
+def test_load_config_resolves_absolute_paths(tmp_path, monkeypatch):
+    """Relative paths resolve against the project dir to ABSOLUTE ones:
+    the JVM resolves a relative path against its own cwd, so Parquet
+    and the catalog JSON would otherwise land in different dirs."""
+    from arnab_spark.config import load_config
+
+    (tmp_path / "config.yaml").write_text(
+        "models_dir: models\nmacro_path: macros\ndb_path: wh\n"
+    )
+    monkeypatch.chdir(tmp_path)
+    here = os.getcwd()
+    cfg = load_config(".")
+    assert (cfg.models_dir, cfg.macro_path, cfg.db_path) == tuple(
+        os.path.join(here, d) for d in ("models", "macros", "wh")
+    )
+    cfg = load_config(".", "m2", "wh2")
+    assert (cfg.models_dir, cfg.db_path) == (
+        os.path.join(here, "m2"),
+        os.path.join(here, "wh2"),
+    )
 
 
 def test_transpile_bare_path_table(spark, tmp_path):

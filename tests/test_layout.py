@@ -14,6 +14,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from arnab_spark.catalog import OLD, STAGING
 from arnab_spark.config import load_config
 from arnab_spark.errors import ArnabError
 from arnab_spark.session import Session
@@ -221,8 +222,8 @@ def test_layout_incremental_property_sweep(
         assert got == exp
 
         dest = os.path.join(root, "warehouse", "swept")
-        assert not os.path.isdir(dest + "__staging")
-        assert not os.path.isdir(dest + "__old")
+        assert not os.path.isdir(dest + STAGING)
+        assert not os.path.isdir(dest + OLD)
         if partition:
             dirs = sorted(
                 d.split("=", 1)[1]
