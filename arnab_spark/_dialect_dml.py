@@ -25,7 +25,7 @@ from arnab_spark.dialect import (
     transpile_statement,
 )
 from arnab_spark._dialect_statements import _attached_for
-from arnab_spark.catalog import has_part_files, replace_parquet
+from arnab_spark.catalog import has_part_files, register_table, replace_parquet
 
 # ------------------------------------------- DML: INSERT / DELETE / UPDATE
 #
@@ -238,7 +238,7 @@ def _dml_append(spark, name: str, aligned) -> None:
             _os.makedirs(tgt, exist_ok=True)
             _os.rename(_os.path.join(root, f), _os.path.join(tgt, f))
     _shutil.rmtree(staging, ignore_errors=True)
-    spark.read.parquet(dest).createOrReplaceTempView(name)
+    register_table(spark, name, dest)  # an append keeps the schema
 
 
 def _dml_pruned_rewrite(
@@ -314,7 +314,7 @@ def _dml_persist(spark, name: str, kind: str, df, dest: str | None = None) -> No
             if c.lower() in have
         ]
         replace_parquet(spark, dest, df, pcols)
-        spark.read.parquet(dest).createOrReplaceTempView(name)
+        register_table(spark, name, dest)
     elif kind == "tempview":
         df.localCheckpoint(eager=True).createOrReplaceTempView(name)
     else:  # native catalog table without its own DELETE/UPDATE
@@ -429,10 +429,10 @@ def _overwrite_touched_partitions(
             sub = _os.path.join(dest, *[f"{c}={v}" for c, v in zip(pcols, key)])
             _shutil.rmtree(sub, ignore_errors=True)
     if not has_part_files(dest):
-        spark.createDataFrame([], survivors.schema).write.mode(
-            "overwrite"
-        ).parquet(dest)
-    spark.read.parquet(dest).createOrReplaceTempView(name)
+        # every partition died: the table becomes one empty flat file,
+        # and the replace writes the schema file to match
+        replace_parquet(spark, dest, spark.createDataFrame([], survivors.schema))
+    register_table(spark, name, dest)  # dynamic overwrite keeps the schema
 
 
 def _parse_assignments(assigns_text: str, types: dict, name: str) -> dict:
@@ -1024,7 +1024,7 @@ def _rewrite_alter_table(sql: str, spark):
             _os.rename(dest, new_dest)
             backing[new.lower()] = new_dest
             spark.catalog.dropTempView(name)
-            spark.read.parquet(new_dest).createOrReplaceTempView(new)
+            register_table(spark, new, new_dest)
             wh = warehouse_for(spark)
             if wh and _os.path.dirname(new_dest) == _os.path.normpath(wh):
                 from arnab_spark.catalog import record_model, remove_model
@@ -1598,7 +1598,7 @@ def _rewrite_dml(sql: str, spark):
                         .partitionBy(*pcols)
                         .parquet(dest)
                     )
-                    spark.read.parquet(dest).createOrReplaceTempView(name)
+                    register_table(spark, name, dest)
                     return _returning_select(ret_view) if ret_view else ""
         _dml_persist(spark, name, kind, raw.select(*sel))
         return _returning_select(ret_view) if ret_view else ""

@@ -10,7 +10,7 @@ module records every materialized model in a JSON sidecar inside the
 warehouse directory and re-applies it on attach:
 
 - ``table`` / ``incremental`` models re-register as views over their
-  persisted Parquet (data read lazily — attach itself scans nothing),
+  persisted Parquet (:func:`register_table`),
 - ``view`` models re-create their (transpiled) SELECT as a temp view.
 
 Entries keep pipeline (topological) order: a view recorded after its
@@ -21,7 +21,14 @@ only on *query*, like a DuckDB view over a dropped table; attach warns
 and skips it. Sidecar writes are read-modify-writes under one ``flock``.
 
 Table data changes through :func:`replace_parquet`, the one crash-safe
-way to replace a model's or a script table's Parquet dir.
+way to replace a model's or a script table's Parquet dir. It leaves the
+table's schema next to its data (``SCHEMA_FILE``, promoted with the data
+in the same swap), the way DuckDB's catalog knows every table's schema:
+registering a table — at attach, or after a write — reads that schema
+instead of inferring it, so it neither scans the data nor runs a
+schema-inference Spark job on a Parquet footer. A dir without the file
+(written before it existed, or by a path that drops it) still registers
+through inference.
 """
 
 from __future__ import annotations
@@ -31,11 +38,18 @@ import json
 import os
 import shutil
 
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
 from arnab_spark.errors import ArnabError
 
 CATALOG_FILE = "_arnab_catalog.json"
 MACROS_FILE = "_arnab_macros.json"
 LOCK_FILE = "_arnab.lock"
+#: the schema a table dir was written with, kept inside the dir (Spark's
+#: and pyarrow's listings skip ``_``-prefixed files)
+SCHEMA_FILE = "_arnab_schema.json"
 
 #: suffixes of the two sibling dirs a Parquet replace passes through
 STAGING, OLD = "__staging", "__old"
@@ -58,10 +72,26 @@ def recover(dest: str) -> None:
         os.rename(dest + OLD, dest)
 
 
-def replace_parquet(spark, dest: str, df, partition_cols=()) -> None:
-    """Replace the Parquet dir ``dest`` with ``df`` — the one crash-safe
-    replace every table write goes through (the Spark twin of DuckDB's
-    atomic ``CREATE OR REPLACE TABLE``, reference: node.rs:156-174).
+def _nullable(dt):
+    """``dt`` with every field, array element and map value nullable —
+    the shape Spark gives any Parquet read (``asNullable``)."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def replace_parquet(spark, dest: str, df, partition_cols=()) -> int:
+    """Replace the Parquet dir ``dest`` with ``df`` and return its row
+    count — the one crash-safe replace every table write goes through
+    (the Spark twin of DuckDB's atomic ``CREATE OR REPLACE TABLE``,
+    reference: node.rs:156-174). The count comes from the write itself
+    (an ``Observation`` on ``df``), not from a second job.
 
     ``df`` is written to a staging dir first, so a failing write leaves
     ``dest`` untouched (``df`` may itself read ``dest``) and removes the
@@ -75,27 +105,41 @@ def replace_parquet(spark, dest: str, df, partition_cols=()) -> None:
     - hive dirs carry partition values as text and the read re-infers
       their type (a VARCHAR column of digits reads back as INT) — when
       any partition column reads back with another type, type fidelity
-      beats layout and the data is rewritten flat (a footer read).
+      beats layout and the data is rewritten flat (the partition types
+      come from the directory names: no Spark job).
 
-    Then the old copy moves aside, staging is promoted and the old copy
-    dropped: a crash at any point leaves the old or the new data intact,
-    and :func:`recover` (run here and by :func:`attach_warehouse`)
-    restores the old copy after a crash between the two renames."""
+    The staged dir then gets its ``SCHEMA_FILE``: ``df``'s schema made
+    nullable, with kept partition columns last — what a Parquet read of
+    the dir would infer. Then the old copy moves aside, staging is
+    promoted and the old copy dropped: a crash at any point leaves the
+    old or the new data (each with its own schema) intact, and
+    :func:`recover` (run here and by :func:`attach_warehouse`) restores
+    the old copy after a crash between the two renames."""
     recover(dest)
     staging, old = dest + STAGING, dest + OLD
+    pcols = list(partition_cols)
+    data = T.StructType([f for f in df.schema if f.name not in pcols])
+    rows = Observation()
     try:
-        writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
+        writer = df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
+        if pcols:
+            writer = writer.partitionBy(*pcols)
         writer.parquet(staging)
         if not has_part_files(staging):
             spark.createDataFrame([], df.schema).write.mode("overwrite").parquet(staging)
-        elif partition_cols:
-            back, want = dict(spark.read.parquet(staging).dtypes), dict(df.dtypes)
-            if any(back.get(c) != want[c] for c in partition_cols):
+            pcols = []
+        elif pcols:
+            back, want = dict(spark.read.schema(data).parquet(staging).dtypes), dict(df.dtypes)
+            if any(back.get(c) != want[c] for c in pcols):
                 df.write.mode("overwrite").parquet(staging)
+                pcols = []
         if not has_part_files(staging):
             raise ArnabError(f"staged write of {dest} left no parquet part file")
+        schema = df.schema
+        if pcols:  # a hive read puts the partition columns last
+            schema = T.StructType(list(data) + [df.schema[c] for c in pcols])
+        with open(os.path.join(staging, SCHEMA_FILE), "w", encoding="utf-8") as f:
+            f.write(_nullable(schema).json())
     except BaseException:
         shutil.rmtree(staging, ignore_errors=True)  # dest is untouched
         raise
@@ -104,6 +148,27 @@ def replace_parquet(spark, dest: str, df, partition_cols=()) -> None:
         os.rename(dest, old)
     os.rename(staging, dest)
     shutil.rmtree(old, ignore_errors=True)
+    return rows.get["n"]
+
+
+def read_table(spark, dest: str):
+    """A DataFrame over the table dir ``dest``, read with the schema it
+    was written with (``SCHEMA_FILE``): no Spark job. A dir without the
+    file falls back to schema inference (one footer-read job)."""
+    path = os.path.join(dest, SCHEMA_FILE)
+    if not os.path.isfile(path):
+        return spark.read.parquet(dest)
+    if not has_part_files(dest):
+        # with a given schema Spark would read it as an empty table
+        raise ArnabError(f"table dir {dest} holds no parquet part file")
+    with open(path, encoding="utf-8") as f:
+        schema = T.StructType.fromJson(json.load(f))
+    return spark.read.schema(schema).parquet(dest)
+
+
+def register_table(spark, name: str, dest: str) -> None:
+    """Register the table dir ``dest`` as the temp view ``name``."""
+    read_table(spark, dest).createOrReplaceTempView(name)
 
 
 def _read_json(path: str) -> dict:
@@ -258,7 +323,7 @@ def attach_warehouse(spark, db_path: str, prefix: str = "") -> list[str]:
             if entry["materialize"] in ("table", "incremental"):
                 dest = os.path.join(db_path, model_id)
                 recover(dest)
-                spark.read.parquet(dest).createOrReplaceTempView(prefix + model_id)
+                register_table(spark, prefix + model_id, dest)
                 if not prefix:
                     # the session's OWN warehouse is writable: record the
                     # backing dir so dialect-level DML persists through a

@@ -20,7 +20,8 @@ The Spark materialization mapping (reference: node.rs:156-174):
 - ``table`` → execute the SELECT and replace the Parquet dir
   ``{db_path}/{id}`` with it (:func:`arnab_spark.catalog.replace_parquet`:
   staged write, then swap — a failing run keeps the previous table),
-  then register a view over the Parquet. This persists across sessions
+  then register a view over the Parquet with the schema written beside
+  it (no schema-inference job). This persists across sessions
   like the reference's file-backed DuckDB catalog (reference:
   main.rs:126-132), and at scale gives downstream models a pruned
   columnar scan instead of a recomputation.
@@ -254,7 +255,7 @@ class Node:
         catalog.recover(dest)  # merge into the last complete copy
         if not os.path.isdir(dest):
             return df
-        existing = spark.read.parquet(dest)
+        existing = catalog.read_table(spark, dest)
         if not self.unique_key:
             return existing.unionByName(df)
         keys = [k.strip() for k in self.unique_key.split(",")]
@@ -272,9 +273,10 @@ class Node:
         SQL view as a temp view over ``select_sql``, recorded in the
         catalog so later sessions re-create it; a Python view has no
         SELECT to record. A table or incremental model replaces its
-        Parquet dir, registers a view over it, records the backing (so
-        dialect-level DML persists through the same replace) and the
-        catalog entry, and returns the row count."""
+        Parquet dir, registers a view over it with the schema it was
+        written with, records the backing (so dialect-level DML persists
+        through the same replace) and the catalog entry, and returns the
+        row count the write observed."""
         if self.materialize == "view":
             if select_sql is None:
                 df.createOrReplaceTempView(self.id)
@@ -290,12 +292,13 @@ class Node:
         if self.materialize == "incremental":
             df = self._merge_incremental(spark, df, dest)
         df, pcols = self._layout(df)
-        catalog.replace_parquet(spark, dest, df, pcols)
-        spark.read.parquet(dest).createOrReplaceTempView(self.id)
+        # the row count the reference reads back after the write
+        # (node.rs:179-189) is observed during the write itself
+        n_rows = catalog.replace_parquet(spark, dest, df, pcols)
+        catalog.register_table(spark, self.id, dest)
         table_backing_for(spark)[self.id.lower()] = dest
         catalog.record_model(db_path, self.id, self.materialize)
-        # row-count readback (reference: node.rs:179-189)
-        return NodeExecutionResult(spark.table(self.id).count(), self.materialize)
+        return NodeExecutionResult(n_rows, self.materialize)
 
     def execute(self, spark, db_path: str | None) -> NodeExecutionResult:
         """Run the model (reference: node.rs:125-207). A Python model's

@@ -9,13 +9,15 @@ the swap's two renames is recovered by the next write or by
 
 import contextlib
 import io
+import json
 import os
 import types
 
 import duckdb
 import pytest
+from pyspark.sql.types import StructType
 
-from arnab_spark.catalog import OLD, STAGING
+from arnab_spark.catalog import OLD, SCHEMA_FILE, STAGING
 from arnab_spark.config import Config, load_config
 from arnab_spark.dialect import transpile_statement
 from arnab_spark.session import Session
@@ -60,6 +62,13 @@ def _attach(spark, db_path):
 
 def _rows(session, name):
     return sorted(tuple(r) for r in session.table(name).collect())
+
+
+def _schema_file_matches(session, dest):
+    """The table dir's schema file describes the data it holds."""
+    with open(os.path.join(dest, SCHEMA_FILE), encoding="utf-8") as f:
+        stored = StructType.fromJson(json.load(f))
+    return stored == session.read.parquet(dest).schema
 
 
 def _sql(session, stmt):
@@ -141,11 +150,12 @@ def test_model_crash_between_renames_recovers(
     # a new connection restores the old copy...
     fresh, warnings = _attach(spark, os.path.join(root, "wh"))
     assert warnings == "" and _rows(fresh, "u") == [(1, "a"), (2, "b")]
+    assert _schema_file_matches(fresh, dest)
     # ...and the next write goes through
     session = spark.newSession()
     assert Session(load_config(root), session).run(quiet=True).ok
     want = [(3, "c")] if materialize == "table" else [(1, "a"), (2, "b"), (3, "c")]
-    assert _rows(session, "u") == want
+    assert _rows(session, "u") == want and _schema_file_matches(session, dest)
     assert not os.path.exists(dest + OLD) and not os.path.exists(dest + STAGING)
 
 
@@ -165,6 +175,7 @@ def test_model_crash_recovered_by_next_write(spark, tmp_path, crash):
     _source(root, [(4, "d")])
     assert sess.run(quiet=True).ok
     assert _rows(session, "u") == [(1, "a"), (2, "b"), (4, "d")]
+    assert _schema_file_matches(session, dest)
 
 
 @pytest.mark.parametrize(
@@ -182,8 +193,10 @@ def test_script_crash_between_renames_recovers(spark, tmp_path, crash, stmt):
     crash.armed = False
     fresh, warnings = _attach(spark, wh)
     assert warnings == "" and _rows(fresh, "t") == [(1, "a"), (2, "b")]
+    assert _schema_file_matches(fresh, os.path.join(wh, "t"))
     _sql(fresh, stmt)
     assert _rows(fresh, "t") == [(1, "z"), (2, "z")]
+    assert _schema_file_matches(fresh, os.path.join(wh, "t"))
 
 
 def test_empty_partitioned_table_model_keeps_schema(spark, tmp_path):
