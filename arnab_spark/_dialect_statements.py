@@ -22,10 +22,10 @@ from arnab_spark.dialect import (
     _comment_spans,
     _lit_match,
     _quoted_spans,
-    _resolve_path,
     _scan_top_level,
     _split_top_level_commas,
     _strip_outer_parens,
+    bind_source,
     transpile_statement,
 )
 
@@ -1174,9 +1174,8 @@ def _rewrite_asof_join(sql: str) -> str:
 
 #: read_parquet/read_csv/read_json with a LIST of path literals —
 #: DuckDB's multi-file scan. Spark's file-query syntax takes one path,
-#: so the list form substitutes a temp view built by the multi-path
-#: DataFrame reader (needs a live session; without one it is left for
-#: Spark to reject loudly).
+#: so the list binds as a source view (needs a live session; without
+#: one it is left for Spark to reject loudly).
 _READ_LIST = re.compile(
     r"\bread_(parquet|csv|json)\s*\(\s*\[([^\]]+)\]\s*\)", re.IGNORECASE
 )
@@ -1187,21 +1186,13 @@ def _rewrite_read_file_lists(sql: str, spark) -> str:
         return sql
 
     def sub(m: re.Match) -> str:
-        fmt = m.group(1).lower()
         paths = []
         for item in _split_top_level_commas(m.group(2)):
             lm = _lit_match(item)
             if not lm:
                 return m.group(0)  # dynamic/exotic entry: leave, loud
-            paths.append(_resolve_path(lm.group(1)))
-        import hashlib
-
-        view = (
-            "_arnab_src_"
-            + hashlib.md5(f"{fmt}|{'|'.join(paths)}".encode()).hexdigest()[:12]
-        )
-        getattr(spark.read, fmt)(*paths).createOrReplaceTempView(view)
-        return view
+            paths.append(lm.group(1))
+        return bind_source(spark, m.group(1).lower(), paths)
 
     return _READ_LIST.sub(sub, sql)
 

@@ -17,12 +17,12 @@ import re
 
 from arnab_spark.dialect import (
     _BARE_PATH,
-    _FORMAT_MAP,
     _READ_FUNC,
     _balanced_outside_quotes,
+    _bare_path_relation,
     _is_set_op_at,
     _quoted_spans,
-    _resolve_path,
+    _read_func_relation,
     _rewrite_distinct_on,
     _rewrite_qualify,
     _rewrite_string_split,
@@ -662,16 +662,13 @@ def _probe_schema(head: str, probe_prefix: str, tail: str, spark):
     """ANALYZE (never execute) ``{prefix}SELECT {head} {tail}`` and
     return its Spark schema; ``None`` when unprovable. The probe text
     gets the read-function / bare-path relation rewrites the full
-    pipeline would apply later, so a ``FROM read_parquet('…')`` context
-    still types; ``*_auto`` sources need session-view substitution and
-    bail to None. Results are memoized per session keyed by the probe
-    text — transpiling the same statement again (bench loops, repeated
-    models) pays zero analysis calls."""
+    pipeline would apply later (:func:`bind_source`), so a ``FROM
+    read_parquet('…')`` context still types. Results are memoized per
+    session keyed by the probe text — transpiling the same statement
+    again (bench loops, repeated models) pays zero analysis calls."""
     if spark is None:
         return None
     probe = f"{probe_prefix}SELECT {head} {tail}".strip()
-    if re.search(r"(?i)\bread_(?:csv_auto|json_auto)\s*\(", probe):
-        return None
     # the probe runs MID-pipeline: apply the text-level passes that
     # normally run after the unnest stage so a prefix/tail containing
     # string_split / QUALIFY / DISTINCT ON / ASOF / SAMPLE / file
@@ -682,18 +679,11 @@ def _probe_schema(head: str, probe_prefix: str, tail: str, spark):
     probe = _rewrite_qualify(probe)
     probe = _rewrite_distinct_on(probe)
     probe = _rewrite_asof_join(probe)
-    probe = _READ_FUNC.sub(
-        lambda m: f"{_FORMAT_MAP[m.group(1).lower()]}.`{_resolve_path(m.group(2))}`",
-        probe,
-    )
-
-    def _bare(m: re.Match) -> str:
-        path = _resolve_path(m.group(2))
-        low = path.lower()
-        fmt = "parquet" if ".parquet" in low else "csv" if ".csv" in low else "json"
-        return f"{m.group(1)} {fmt}.`{path}`"
-
-    probe = _BARE_PATH.sub(_bare, probe)
+    try:  # binding a file source reads it: a missing file is unprovable
+        probe = _READ_FUNC.sub(lambda m: _read_func_relation(m, spark), probe)
+        probe = _BARE_PATH.sub(lambda m: _bare_path_relation(m, spark), probe)
+    except Exception:
+        return None
     cache = _PROBE_BY_SESSION.setdefault(spark, {})
     if probe in cache:
         return cache[probe]

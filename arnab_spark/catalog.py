@@ -12,6 +12,12 @@ warehouse directory and re-applies it on attach:
 - ``table`` / ``incremental`` models re-register as views over their
   persisted Parquet (:func:`register_table`),
 - ``view`` models re-create their (transpiled) SELECT as a temp view.
+  A SELECT over a file source names the source's bound view
+  (``_arnab_src_<md5>``, see :func:`arnab_spark.dialect.bind_source`);
+  the entry's ``"sources"`` map (``{name: {format, paths, options}}``)
+  lets attach bind those names again before it re-creates the view.
+  Entries written before the map existed hold Spark's file-query text
+  (``parquet.`p```) and attach as they are.
 
 Entries keep pipeline (topological) order: a view recorded after its
 upstream table re-applies after it, so references resolve. Upserts
@@ -207,7 +213,12 @@ def record_model(
     """Upsert one model's catalog entry."""
     entry = {"materialize": materialize}
     if select_sql is not None:
+        from arnab_spark.dialect import bound_sources_in
+
         entry["select"] = select_sql
+        sources = bound_sources_in(select_sql)
+        if sources:
+            entry["sources"] = sources
 
     def upsert(cat: dict) -> bool:
         # dict assignment keeps an existing key's insertion position —
@@ -332,7 +343,14 @@ def attach_warehouse(spark, db_path: str, prefix: str = "") -> list[str]:
 
                     table_backing_for(spark)[model_id.lower()] = dest
             else:
+                from arnab_spark.dialect import bind_source
+
                 select = entry["select"]
+                for name, src in entry.get("sources", {}).items():
+                    text = bind_source(spark, src["format"], src["paths"], src["options"])
+                    # a vanished file binds as file-query text: Spark
+                    # then names the missing path
+                    select = select.replace(name, text)
                 if prefix:
                     from arnab_spark.depparse import get_sql_references
 

@@ -6,8 +6,16 @@ Spark SQL covers almost all of it natively (SURVEY.md §2.B); this module
 rewrites the purely syntactic gaps so those models run unchanged:
 
 - zero-arg ``count()`` → ``count(*)``
-- ``read_parquet('p')`` & friends → Spark file-query syntax
-- bare-string tables ``FROM 'x.parquet'`` → Spark file-query syntax
+- ``read_parquet('p')`` & friends (``read_csv``/``read_json``, the
+  ``_auto`` variants, path lists) and bare-string tables ``FROM
+  'x.parquet'`` → with a session and local paths, a session temp view
+  over the files bound once per session (:func:`bind_source`: schema
+  inferred once per process, reused while the files and SQL confs are
+  unchanged); every ``transpile_statement`` call re-stats the session's
+  bound sources and re-registers changed ones, so a view sees added,
+  deleted and rewritten files like a DuckDB view does. Without a
+  session, or for a non-local path (s3a://, hdfs://), Spark's
+  file-query text ``parquet.`p```
 - ``SELECT * EXCLUDE (a, b)`` → Spark's ``* EXCEPT (a, b)``
 - top-level ``QUALIFY <pred>`` → subquery + filter
 - top-level ``SELECT DISTINCT ON (keys) …`` → row_number window +
@@ -58,14 +66,18 @@ rewrite is worse than a clear error.
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import os
 import re
+from weakref import WeakKeyDictionary
 
 # DuckDB allows zero-argument count() (used by the reference's example
 # model, reference: examples/basic/orders_per_product.sql:2).
 _COUNT_ZERO_ARG = re.compile(r"\bcount\s*\(\s*\)", re.IGNORECASE)
 
 # read_parquet('path') / read_csv_auto('path') / read_json_auto('path')
-# → Spark's direct-file-query syntax: parquet.`path` / csv.`path` / ...
+# → a bound source view, or Spark's file-query syntax parquet.`path`
 _READ_FUNC = re.compile(
     r"\bread_(parquet|csv|csv_auto|json|json_auto)\s*\(\s*'([^']+)'\s*\)",
     re.IGNORECASE,
@@ -95,8 +107,6 @@ def _resolve_path(path: str) -> str:
     exists for reference-compatibility, not as a data-transfer path."""
     if not path.lower().startswith(("http://", "https://")):
         return path
-    import hashlib
-    import os
     import urllib.request
 
     cache = _remote_cache_base()
@@ -123,6 +133,157 @@ _BARE_PATH = re.compile(
     r"\b(FROM|JOIN)\s+'([^']+\.(?:parquet|csv|json)(?:\.gz)?)'",
     re.IGNORECASE,
 )
+
+
+# ------------------------------------------------------- file sources
+#
+# DuckDB binds ``read_parquet('p')`` with an in-process footer read.
+# Spark's file-query text ``parquet.`p``` instead re-infers the schema
+# with a one-task job every time a statement that reaches it is
+# analyzed: through every view over it, in every session. With a
+# session and local paths, a file relation therefore binds once per
+# session, as a temp view over a DataFrame read with a known schema. A
+# view over a DataFrame keeps its analyzed plan, so analyzing a view
+# chain over it runs no job.
+
+#: (format, paths, options) → (file stamp, SQL confs, inferred schema DDL):
+#: one entry per source, valid while both still match
+_SOURCE_SCHEMAS: dict[tuple, tuple] = {}
+#: bound view name → {"format", "paths", "options"}, for the catalog
+_SOURCE_SPECS: dict[str, dict] = {}
+#: session → {bound view name: (source key, file stamp it was read at)}
+_BOUND_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
+_SOURCE_NAME = re.compile(r"\b_arnab_src_[0-9a-f]{12}\b")
+_AUTO_OPTIONS = {"csv_auto": {"header": "true", "inferSchema": "true"}}
+
+
+def _source_stamp(paths) -> tuple | None:
+    """``(file, size, mtime_ns)`` of every file the local ``paths``
+    cover (globs expanded, directories walked); None when a path is not
+    local or matches nothing — such a source is left to Spark."""
+    files = []
+    for p in paths:
+        if "://" in p or p.lower().startswith("file:"):
+            return None
+        if glob.has_magic(p):
+            hits = glob.glob(p)
+        else:
+            hits = [p] if os.path.exists(p) else []
+        if not hits:
+            return None
+        for h in hits:
+            if os.path.isdir(h):
+                files += [os.path.join(r, f) for r, _d, fs in os.walk(h) for f in fs]
+            else:
+                files.append(h)
+    stamp = []
+    for f in sorted(files):
+        try:
+            st = os.stat(f)
+        except OSError:  # deleted while listing
+            return None
+        stamp.append((os.path.abspath(f), st.st_size, st.st_mtime_ns))
+    return tuple(stamp)
+
+
+def _register_source(spark, name: str, key: tuple, stamp: tuple | None) -> None:
+    """Register ``name`` as a view over ``key``'s files: read with the
+    cached schema while ``stamp`` and the session's SQL confs match it,
+    else inferred (one Spark job) and, for a local source, cached."""
+    fmt, paths, opts = key
+    reader = spark.read.format(fmt).options(**dict(opts))
+    path = paths[0] if len(paths) == 1 else list(paths)
+    confs = spark._jsparkSession.conf().getAll().toString() if stamp else None
+    hit = _SOURCE_SCHEMAS.get(key)
+    if stamp and hit is not None and hit[:2] == (stamp, confs):
+        df = reader.schema(hit[2]).load(path)
+    else:
+        df = reader.load(path)
+        if stamp:
+            _SOURCE_SCHEMAS[key] = (stamp, confs, df.schema.toDDL())
+    df.createOrReplaceTempView(name)
+
+
+def bind_source(spark, fmt: str, paths, options: dict | None = None) -> str:
+    """The relation text for the file source ``fmt``/``paths`` read
+    with ``options``: the name of a session temp view
+    ``_arnab_src_<md5>`` bound to it, or Spark's file-query text
+    ``fmt.`path``` for one path without options when there is no
+    session or the path is non-local or missing (Spark then scans or
+    rejects it itself). A path list or ``options`` need a session.
+
+    A local source registers once per session while its files are
+    unchanged; its schema comes from the per-process cache. A non-local
+    path list or optioned read is read anew (inferred) on every call."""
+    paths = [_resolve_path(p) for p in paths]
+    stamp = _source_stamp(paths) if spark is not None else None
+    if stamp is None and len(paths) == 1 and not options:
+        return f"{fmt}.`{paths[0]}`"
+    if stamp:  # the catalog keeps the source; it must not depend on the cwd
+        paths = [os.path.abspath(p) for p in paths]
+    key = (fmt, tuple(paths), tuple(sorted((options or {}).items())))
+    name = "_arnab_src_" + hashlib.md5(repr(key).encode()).hexdigest()[:12]
+    _SOURCE_SPECS[name] = {"format": fmt, "paths": list(key[1]), "options": dict(key[2])}
+    bound = _BOUND_BY_SESSION.setdefault(spark, {})
+    if stamp is None or bound.get(name) != (key, stamp):
+        _register_source(spark, name, key, stamp)
+        if stamp:
+            bound[name] = (key, stamp)
+    return name
+
+
+def _refresh_sources(spark) -> None:
+    """Late binding: a DuckDB view re-reads its files at query time, so
+    re-register each of the session's bound sources whose files changed
+    since it was bound (added, deleted or rewritten). A source that now
+    matches nothing keeps its binding, whose scan then fails naming the
+    missing file. One that no longer reads is dropped, so a statement
+    reaching it fails instead of reading stale files."""
+    bound = _BOUND_BY_SESSION.get(spark)
+    for name, (key, stamp) in list((bound or {}).items()):
+        now = _source_stamp(key[1])
+        if now is None or now == stamp:
+            continue
+        try:
+            _register_source(spark, name, key, now)
+            bound[name] = (key, now)
+        except Exception:  # e.g. a half-written file: fail where it is read
+            spark.catalog.dropTempView(name)
+            del bound[name]
+
+
+def bound_sources_in(sql: str) -> dict[str, dict]:
+    """The bound source views ``sql`` reads, as ``{name: spec}`` — what
+    a catalog entry keeps so a later session can bind them again."""
+    return {n: _SOURCE_SPECS[n] for n in _SOURCE_NAME.findall(sql) if n in _SOURCE_SPECS}
+
+
+def _read_func_relation(m: re.Match, spark) -> str:
+    """``read_<kind>('path')`` (a :data:`_READ_FUNC` match) → relation
+    text. The ``*_auto`` variants promise DuckDB's sniffing (header
+    detection, type inference), which the bare file-query syntax cannot
+    honor — so they need a session (read with header/inferSchema
+    options) and raise without one instead of silently degrading to
+    headerless-string semantics."""
+    kind = m.group(1).lower()
+    if spark is None and kind in ("csv_auto", "json_auto"):
+        from arnab_spark.errors import ArnabError
+
+        raise ArnabError(
+            f"read_{kind}('{m.group(2)}') needs an active SparkSession to honor "
+            "DuckDB's sniffing semantics (header detection / type inference); "
+            "pass one to transpile_statement, or use read_csv/read_json for "
+            "the optionless file scan."
+        )
+    return bind_source(spark, _FORMAT_MAP[kind], [m.group(2)], _AUTO_OPTIONS.get(kind))
+
+
+def _bare_path_relation(m: re.Match, spark) -> str:
+    """``FROM|JOIN 'x.parquet'`` (a :data:`_BARE_PATH` match) → the
+    same keyword followed by the relation text."""
+    low = m.group(2).lower()
+    fmt = "parquet" if ".parquet" in low else "csv" if ".csv" in low else "json"
+    return f"{m.group(1)} {bind_source(spark, fmt, [m.group(2)])}"
 
 
 def _scan_top_level(sql: str, words: tuple[str, ...], start: int = 0) -> tuple[int, str | None]:
@@ -3475,15 +3636,13 @@ def _rewrite_using_sample(sql: str) -> str:
 def transpile_statement(sql: str, spark=None) -> str:
     """Apply the DuckDB→Spark rewrites to one statement.
 
-    ``read_parquet``/``read_csv``/``read_json`` map to Spark's
-    file-query syntax (``parquet.`path```). The ``*_auto`` variants
-    promise DuckDB's sniffing (header detection, type inference), which
-    the bare file-query syntax cannot honor — so they require a live
-    session (loaded with header/inferSchema options and substituted as
-    temp views); without one they raise instead of silently degrading
-    to headerless-string semantics (round-2 fix — the silent fallback
-    produced wrong column names/types with no signal).
+    File relations (``read_parquet``/``read_csv``/``read_json``, their
+    ``*_auto`` variants, path lists, bare-string tables) bind through
+    :func:`bind_source`; with a session, the session's bound sources
+    are re-statted first, so changed files are read anew (late binding).
     """
+    if spark is not None:
+        _refresh_sources(spark)
     _reject_sequences(sql)
     _reject_positional_join(sql)
     macros = _macros_for(spark)
@@ -3651,49 +3810,11 @@ def transpile_statement(sql: str, spark=None) -> str:
     sql = _rewrite_copy(sql, spark)
     sql = _rewrite_unpivot(sql)
     sql = _rewrite_using_sample(sql)
-
-    def bare_path(m: re.Match) -> str:
-        path = _resolve_path(m.group(2))
-        low = path.lower()
-        fmt = (
-            "parquet"
-            if ".parquet" in low
-            else "csv" if ".csv" in low else "json"
-        )
-        return f"{m.group(1)} {fmt}.`{path}`"
-
-    sql = _BARE_PATH.sub(bare_path, sql)
+    sql = _BARE_PATH.sub(lambda m: _bare_path_relation(m, spark), sql)
     sql = _rewrite_qualify(sql)
     sql = _rewrite_distinct_on(sql)
     sql = _rewrite_asof_join(sql)
-
-    def rewrite(m: re.Match) -> str:
-        kind = m.group(1).lower()
-        path = _resolve_path(m.group(2))
-        fmt = _FORMAT_MAP[kind]
-        if kind in ("csv_auto", "json_auto") and spark is None:
-            from arnab_spark.errors import ArnabError
-
-            raise ArnabError(
-                f"read_{kind}('{path}') needs an active SparkSession to honor "
-                "DuckDB's sniffing semantics (header detection / type inference); "
-                "pass one to transpile_statement, or use read_csv/read_json for "
-                "the optionless file scan."
-            )
-        if spark is not None and kind in ("csv_auto", "json_auto"):
-            import hashlib
-
-            view = "_arnab_src_" + hashlib.md5(f"{kind}|{path}".encode()).hexdigest()[:12]
-            reader = spark.read
-            if fmt == "csv":
-                df = reader.csv(path, header=True, inferSchema=True)
-            else:
-                df = reader.json(path)
-            df.createOrReplaceTempView(view)
-            return view
-        return f"{fmt}.`{path}`"
-
-    sql = _READ_FUNC.sub(rewrite, sql)
+    sql = _READ_FUNC.sub(lambda m: _read_func_relation(m, spark), sql)
     # after the read rewrite so file-queries resolve as relations (the
     # dynamic pivot's bind-time DISTINCT must be runnable on Spark)
     sql = _rewrite_pivot(sql, spark)

@@ -6,6 +6,7 @@ it. After every writer the registered view must look exactly like a
 schema-inferring Parquet read of the same dir: same schema (types,
 nullability, column order, metadata) and same rows."""
 
+import itertools
 import json
 import os
 
@@ -52,10 +53,14 @@ def _assert_registered_as_written(session, name, dest):
     assert _rows(session.table(name)) == _rows(inferred)
 
 
+_GROUPS = itertools.count()
+
+
 def _jobs(spark, fn):
-    """Number of Spark jobs ``fn()`` runs."""
+    """Number of Spark jobs ``fn()`` runs (a job group of its own: the
+    status tracker keeps a group's earlier jobs)."""
     sc = spark.sparkContext
-    group = f"register-schema-{id(fn)}"
+    group = f"jobs-{next(_GROUPS)}"
     sc.setJobGroup(group, group)
     try:
         fn()
